@@ -88,14 +88,18 @@ final class GraftDatabase(client: GraftClient, catalog: Catalog, val name: Strin
   /** describe_collection (stub.py:317). */
   def describeCollection(coll: String): Map[String, String] =
     catalog.describeCollection(name, catalog.resolve(name, coll))
+  /** drop_collection: the collection and every sibling collection it
+    * owns — the siblings first, so an interrupted drop leaves a
+    * collection whose indexes read as not live, never orphans. */
   def dropCollection(coll: String): Unit = {
+    GraftCollection.companions(coll).foreach(c =>
+      if (catalog.collectionExists(name, c)) catalog.dropCollection(name, c))
     catalog.dropCollection(name, coll)
     GraftCollection.evictHnswServing(catalog.rootPath, name, coll)
   }
-  def truncateCollection(coll: String): Unit = {
-    catalog.truncateCollection(name, coll)
-    GraftCollection.evictHnswServing(catalog.rootPath, name, coll)
-  }
+  /** truncate_collection: resolves aliases and drops the derived
+    * indexes with the rows, like [[GraftCollection.truncate]]. */
+  def truncateCollection(coll: String): Unit = collection(coll).truncate()
   def setAlias(alias: String, coll: String): Unit = catalog.setAlias(name, alias, coll)
   def deleteAlias(alias: String): Unit = catalog.deleteAlias(name, alias)
 
@@ -112,14 +116,6 @@ final class GraftDatabase(client: GraftClient, catalog: Catalog, val name: Strin
 final class GraftCollection(spark: SparkSession, catalog: Catalog,
                             db: String, coll: String,
                             idCol: String = "id", vecCol: String = "vector") {
-
-  /** Step timing for the mutation paths, printed only when
-    * GRAFT_PROF is set (profiling runs; zero cost otherwise). */
-  private def ptime[A](name: String)(f: => A): A =
-    if (sys.env.contains("GRAFT_PROF")) {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[gprof]   $name%-24s ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    } else f
 
   /** Internal layout columns (hash bucket, IVF cell) never reach
     * readers — layout is a storage detail, not document schema. */
@@ -171,23 +167,16 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * paid — an upsert costs O(batch), not O(corpus). */
   def upsert(docs: DataFrame): Unit = {
     val meta = describe
-    val live = liveIndexes(meta)
-    import live.{ftLive, lshLive, ivfLive, mhLive, shLive, pqLive, ivfPqLive,
-      ivfSqLive, hnswLive, bqLive}
-    val anyLive = live.anySeg
+    val live = liveFamilies(meta)
 
     // ALL batch-shape validation runs BEFORE anything is written: a
     // batch that cannot complete the whole upsert must fail with the
     // index artifacts, stats, ledger, and data all untouched
-    if (ftLive) require(docs.columns.contains(meta("index.ft.text_col")),
-      s"upsert on a fulltext-indexed collection must carry '${meta("index.ft.text_col")}'")
-    if (mhLive) require(docs.columns.contains(meta("index.mh.text_col")),
-      s"upsert on a minhash-indexed collection must carry '${meta("index.mh.text_col")}'")
-    if (shLive) require(docs.columns.contains(meta("index.sh.text_col")),
-      s"upsert on a simhash-indexed collection must carry '${meta("index.sh.text_col")}'")
-    if (lshLive || pqLive || ivfPqLive || ivfSqLive || ivfLive || hnswLive)
-      require(docs.columns.contains(vecCol),
-        s"upsert on a vector-indexed collection must carry '$vecCol'")
+    live.foreach { f =>
+      val c = f.batchCol(meta, vecCol)
+      require(docs.columns.contains(c),
+        s"upsert on a ${f.noun}-indexed collection must carry '$c'")
+    }
 
     // One-row-per-id within the batch, enforced ONCE for data and index
     // paths alike: DocumentOps.upsert would keep an arbitrary duplicate
@@ -203,11 +192,11 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     // null primary keys break last-wins merge and ledger masking alike
     // (null join keys never match) — reject them like the reference's
     // required document id
-    ptime("null-id check")(require(batch.where(col(idCol).isNull).isEmpty,
-      s"documents must carry a non-null '$idCol'"))
+    require(batch.where(col(idCol).isNull).isEmpty,
+      s"documents must carry a non-null '$idCol'")
 
     val current = df
-    val currentEmpty = ptime("currentEmpty")(current.isEmpty)
+    val currentEmpty = current.isEmpty
     // the merge projects the batch onto the stored document schema —
     // a batch missing stored columns throws there, which is AFTER the
     // index artifacts below are written. Check coverage first, so a
@@ -238,7 +227,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     // pure READ, hoisted above the fail-safe region: a failure here
     // (e.g. a corrupted centroids artifact) leaves every index intact
     val ivfCenters =
-      if (ivfLive) Some(graft.vector.IvfIndex.centersFromDf(
+      if (live.contains(IndexFamily.Ivf)) Some(graft.vector.IvfIndex.centersFromDf(
         catalog.read(db, GraftCollection.ivfCentroids(coll))))
       else None
 
@@ -254,7 +243,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     failSafe {
     // segment-based artifacts read PRE-write state: append them (and the
     // ledger) before the collection data is overwritten
-    if (anyLive) ptime("appendLiveSegments")(appendLiveSegments(batch, meta, live))
+    if (live.exists(_.segmented)) appendLiveSegments(batch, meta, live)
     def withCell(d: DataFrame): DataFrame = ivfCenters match {
       case Some(cs) => d.withColumn(GraftCollection.CellCol,
         graft.vector.IvfIndex.assignExpr(cs, col(vecCol)))
@@ -271,12 +260,12 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
         // collect (over id hashes only — no embed/cell projection) that
         // turns the base read into a partition-pruned scan; shared with
         // bucketPrunedCurrent via touchedBuckets
-        val touched = ptime("touchedBuckets")(touchedBuckets(batch, n))
+        val touched = touchedBuckets(batch, n)
         val slice = catalog.read(db, coll)
           .where(col(GraftCollection.BucketCol).isin(touched: _*))
         val merged = DocumentOps.upsert(stripIndexCols(slice, updates), updates, idCol)
-        ptime("bucket merge write")(catalog.overwritePartitions(db, coll,
-          merged.repartition(col(GraftCollection.BucketCol)), GraftCollection.BucketCol))
+        catalog.overwritePartitions(db, coll,
+          merged.repartition(col(GraftCollection.BucketCol)), GraftCollection.BucketCol)
       case (_, false) =>
         val merged =
           DocumentOps.upsert(stripIndexCols(current, batch), withStoredEmbedding(batch), idCol)
@@ -300,23 +289,19 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
         else catalog.write(db, coll, withStoredEmbedding(batch))
     }
     } // failSafe
-    invalidateDerived(keepFt = ftLive, keepIvf = ivfLive, keepLsh = lshLive,
-      keepMh = mhLive, keepSh = shLive, keepPq = pqLive, keepIvfPq = ivfPqLive,
-      keepIvfSq = ivfSqLive, keepHnsw = hnswLive, keepBq = bqLive,
-      keepSv = live.svLive)
-    if (anyLive) maybeAutoCompact()
+    finishMutation(live, keptCell = true)
     } finally batch.unpersist()
   }
 
   /** Run a mutation's write sequence; on ANY failure drop every derived
     * index before rethrowing. Serving a stale or half-updated index
     * silently would be worse than the rebuild cost — the same principle
-    * invalidateDerived applies to unmaintainable families, extended to
+    * [[finishMutation]] applies to unmaintainable families, extended to
     * interrupted writes. */
   private def failSafe[A](writes: => A): A =
     try writes
     catch { case t: Throwable =>
-      try invalidateDerived()
+      try invalidate(IndexFamily.all)
       catch { case c: Throwable => t.addSuppressed(c) }
       throw t
     }
@@ -331,149 +316,136 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
 
   // ----------------------------------------- incremental index maintenance
 
-  /** Which derived indexes exist and can be maintained across a
-    * mutation. `anySeg` = at least one segment-maintained family is
-    * live (plain IVF is maintained in the data layout instead). */
-  private case class LiveIndexes(ftLive: Boolean, lshLive: Boolean, ivfLive: Boolean,
-                                 mhLive: Boolean, shLive: Boolean, pqLive: Boolean,
-                                 ivfPqLive: Boolean, ivfSqLive: Boolean,
-                                 hnswLive: Boolean, bqLive: Boolean,
-                                 svLive: Boolean) {
-    def anySeg: Boolean =
-      ftLive || lshLive || mhLive || shLive || pqLive || ivfPqLive || ivfSqLive ||
-        hnswLive || bqLive || svLive
-  }
+  /** The index families that exist and can be maintained across a
+    * mutation: live key in meta AND liveness witness on disk. */
+  private def liveFamilies(meta: Map[String, String]): Seq[IndexFamily] =
+    IndexFamily.all.filter(isLive(meta, _))
 
-  private def liveIndexes(meta: Map[String, String]): LiveIndexes = LiveIndexes(
-    ftLive = meta.contains("index.ft.text_col") &&
-      catalog.collectionExists(db, GraftCollection.ftPostings(coll)),
-    lshLive = meta.contains("index.lsh.nbits") &&
-      catalog.collectionExists(db, GraftCollection.lshBuckets(coll)),
-    ivfLive = meta.contains("index.ivf.nlist") &&
-      catalog.collectionExists(db, GraftCollection.ivfCentroids(coll)),
-    mhLive = meta.contains("index.mh.text_col") &&
-      catalog.collectionExists(db, GraftCollection.mhSig(coll)),
-    shLive = meta.contains("index.sh.text_col") &&
-      catalog.collectionExists(db, GraftCollection.shSig(coll)),
-    // PQ-coded families maintain too: encoding against the STORED
-    // codebooks (and stored centroids for the coarse cell) is a pure
-    // per-doc function, exactly like LSH signing
-    pqLive = meta.contains("index.pq.m") &&
-      catalog.collectionExists(db, GraftCollection.pqCodes(coll)),
-    ivfPqLive = meta.contains("index.ivfpq.nlist") &&
-      catalog.collectionExists(db, GraftCollection.ivfPqCodes(coll)),
-    ivfSqLive = meta.contains("index.ivfsq.nlist") &&
-      catalog.collectionExists(db, GraftCollection.ivfSqCodes(coll)),
-    // HNSW maintains by construction: segment graphs are independent,
-    // so a batch becomes its own new segment graph(s) — no existing
-    // graph is ever touched
-    hnswLive = meta.contains("index.hnsw.m") &&
-      catalog.collectionExists(db, GraftCollection.hnswGraph(coll)),
-    // BQ packs against the STORED thresholds — a pure per-doc
-    // projection, the cheapest maintenance of any coded family
-    bqLive = meta.contains("index.bq.dim") &&
-      catalog.collectionExists(db, GraftCollection.bqWords(coll)),
-    // stored-sparse postings are a stat-less per-doc projection too
-    svLive = meta.contains("index.sv.field") &&
-      catalog.collectionExists(db, GraftCollection.svPostings(coll)))
+  private def isLive(meta: Map[String, String], f: IndexFamily): Boolean =
+    meta.contains(f.liveKey) && catalog.collectionExists(db, f.witness(coll))
 
   /** Append one segment per live family for `batch` (one row per id —
     * caller enforces — with the full document schema) and advance the
     * ledger. Shared by upsert and update: an update's post-image rows
     * are exactly an upsert batch as far as the indexes care. */
   private def appendLiveSegments(batch: DataFrame, meta: Map[String, String],
-                                 live: LiveIndexes): Unit = {
+                                 live: Seq[IndexFamily]): Unit = {
     val seg = mutationSeg + 1
-    if (live.ftLive) appendFulltextSegment(batch, seg, meta("index.ft.text_col"))
-    if (live.lshLive) appendLshSegment(batch, seg, meta)
-    if (live.pqLive) {
-      val model = pqModelFromMeta(meta, "index.pq", GraftCollection.pqCodebooks(coll))
-      // encode in the index's GATE SPACE (unit-normalized for a
-      // cosine-built family — the r13 metric contract): a raw-space
-      // code appended to a normalized-space artifact would carry a
-      // meaningless resid and silently break the certificate
-      val (keyed, kid) = indexKeyed(gateSpace(
-        batch.where(col(vecCol).isNotNull), quantMetric(meta, "index.pq")))
-      appendSegRows(GraftCollection.pqCodes(coll), seg,
-        graft.vector.PqIndex.encode(model, keyed, kid, vecCol))
-    }
-    if (live.ivfPqLive) {
-      val pq = pqModelFromMeta(meta, "index.ivfpq", GraftCollection.ivfPqCodebooks(coll))
-      val centers = graft.vector.IvfIndex.centersFromDf(
-        catalog.read(db, GraftCollection.ivfPqCentroids(coll)))
-      val (vecs, kid) = indexKeyed(gateSpace(
-        batch.where(col(vecCol).isNotNull), quantMetric(meta, "index.ivfpq")))
-      val cells = vecs.select(col(kid).cast("long").as("id"),
-        graft.vector.IvfIndex.assignExpr(centers, col(vecCol)).as("cell"))
-      appendSegRows(GraftCollection.ivfPqCodes(coll), seg,
-        graft.vector.PqIndex.encode(pq, vecs, kid, vecCol).join(cells, "id"),
-        subPartition = Seq("cell"))
-      // the batch's per-cell ball radii — same rho-expansion contract
-      // as the IVF_SQ8 append (an appended outlier must widen its
-      // cell's certificate or the radius route would drop it)
-      if (catalog.collectionExists(db, GraftCollection.ivfPqStats(coll)))
-        appendSegRows(GraftCollection.ivfPqStats(coll), seg,
-          graft.vector.IvfIndex.cellStats(
-            centers.map { case (c, i) => (c.toArray, i) }, vecs, vecCol))
-    }
-    if (live.ivfSqLive) {
-      // SQ8 codes against the STORED bounds + coarse centroids — a pure
-      // per-doc projection like the PQ families (bounds are NOT
-      // retrained: out-of-range batch values clamp, as in any SQ index)
-      val sq = sqModelFromMeta(meta)
-      val centers = graft.vector.IvfIndex.centersFromDf(
-          catalog.read(db, GraftCollection.ivfSqCentroids(coll)))
-        .map { case (c, i) => (c.toArray, i) }
-      // gate-space batch (the pq arm's rationale) — also true for the
-      // certificate SIDECAR, whose codes this same arm maintains
-      val (keyed, kid) = indexKeyed(gateSpace(
-        batch.where(col(vecCol).isNotNull), quantMetric(meta, "index.ivfsq")))
-      appendSegRows(GraftCollection.ivfSqCodes(coll), seg,
-        graft.vector.IvfSq.encodeAssigned(centers, sq, keyed, kid, vecCol),
-        subPartition = Seq("cell"))
-      // the batch's own per-cell ball radii: an appended row can lie
-      // farther from its centroid than the base rho — without this row
-      // the radius route's cell certificate would silently understate
-      // a cell and drop a true ball member
-      if (catalog.collectionExists(db, GraftCollection.ivfSqStats(coll)))
-        appendSegRows(GraftCollection.ivfSqStats(coll), seg,
-          graft.vector.IvfSq.cellStats(centers, keyed, vecCol))
-    }
-    // dedup signatures are per-doc pure functions of the text — the
-    // batch's signatures are a self-contained new segment
-    if (live.mhLive) {
-      val sig = graft.dedup.Dedup.minhashSignatures(batch, idCol,
-          meta("index.mh.text_col"), meta("index.mh.shingle").toInt,
-          meta("index.mh.perms").toInt, meta("index.mh.seed").toLong)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        appendSegRows(GraftCollection.mhSig(coll), seg, sig)
-        // keep the joinable band-bucket form in lockstep (one O(batch)
-        // projection; the table may predate the bucket artifact)
-        if (catalog.collectionExists(db, GraftCollection.mhBkt(coll)))
-          appendSegRows(GraftCollection.mhBkt(coll), seg,
-            graft.dedup.Dedup.minhashBandBuckets(sig,
-                meta("index.mh.perms").toInt,
-                meta.getOrElse("index.mh.bands", "8").toInt)
-              .sortWithinPartitions("h"))
-      } finally sig.unpersist()
-    }
-    if (live.shLive) appendSegRows(GraftCollection.shSig(coll), seg,
-      graft.dedup.Dedup.simhashSignatures(batch, idCol, meta("index.sh.text_col")))
-    if (live.bqLive) {
-      val model = bqModelFromMeta(meta)
-      val (keyed, kid) = indexKeyed(batch.where(col(vecCol).isNotNull))
-      appendSegRows(GraftCollection.bqWords(coll), seg,
-        graft.vector.BqIndex.encode(model, keyed, kid, vecCol))
-    }
-    if (live.svLive)
-      appendSegRows(GraftCollection.svPostings(coll), seg,
-        graft.sparse.SparseSearch.sparsePostings(batch, idCol,
-            meta("index.sv.field"))
-          .sortWithinPartitions("term"))
-    if (live.hnswLive) appendHnswSegment(batch, meta)
+    live.foreach(_.append.foreach(_(this, batch, seg, meta)))
     advanceLedger(batch, seg)
   }
+
+  /** The shared tail of upsert, delete and update: drop every family
+    * the mutation could not keep (plain IVF survives only when the
+    * rewrite kept its cell layout), then let the compaction policy
+    * fold. */
+  private def finishMutation(live: Seq[IndexFamily], keptCell: Boolean): Unit = {
+    val kept = if (keptCell) live else live.filterNot(_ == IndexFamily.Ivf)
+    invalidate(IndexFamily.all.filterNot(kept.contains))
+    if (live.exists(_.segmented)) maybeAutoCompact()
+  }
+
+  // Per-family segment appends, wired up in [[IndexFamily]].
+
+  private[api] def appendPqSegment(batch: DataFrame, seg: Int,
+                                   meta: Map[String, String]): Unit = {
+    val model = pqModelFromMeta(meta, "index.pq", GraftCollection.pqCodebooks(coll))
+    // encode in the index's GATE SPACE (unit-normalized for a
+    // cosine-built family — the r13 metric contract): a raw-space
+    // code appended to a normalized-space artifact would carry a
+    // meaningless resid and silently break the certificate
+    val (keyed, kid) = indexKeyed(gateSpace(
+      batch.where(col(vecCol).isNotNull), quantMetric(meta, "index.pq")))
+    appendSegRows(GraftCollection.pqCodes(coll), seg,
+      graft.vector.PqIndex.encode(model, keyed, kid, vecCol))
+  }
+
+  private[api] def appendIvfPqSegment(batch: DataFrame, seg: Int,
+                                      meta: Map[String, String]): Unit = {
+    val pq = pqModelFromMeta(meta, "index.ivfpq", GraftCollection.ivfPqCodebooks(coll))
+    val centers = graft.vector.IvfIndex.centersFromDf(
+      catalog.read(db, GraftCollection.ivfPqCentroids(coll)))
+    val (vecs, kid) = indexKeyed(gateSpace(
+      batch.where(col(vecCol).isNotNull), quantMetric(meta, "index.ivfpq")))
+    val cells = vecs.select(col(kid).cast("long").as("id"),
+      graft.vector.IvfIndex.assignExpr(centers, col(vecCol)).as("cell"))
+    appendSegRows(GraftCollection.ivfPqCodes(coll), seg,
+      graft.vector.PqIndex.encode(pq, vecs, kid, vecCol).join(cells, "id"),
+      subPartition = Seq("cell"))
+    // the batch's per-cell ball radii — same rho-expansion contract
+    // as the IVF_SQ8 append (an appended outlier must widen its
+    // cell's certificate or the radius route would drop it)
+    if (catalog.collectionExists(db, GraftCollection.ivfPqStats(coll)))
+      appendSegRows(GraftCollection.ivfPqStats(coll), seg,
+        graft.vector.IvfIndex.cellStats(
+          centers.map { case (c, i) => (c.toArray, i) }, vecs, vecCol))
+  }
+
+  private[api] def appendIvfSqSegment(batch: DataFrame, seg: Int,
+                                      meta: Map[String, String]): Unit = {
+    // SQ8 codes against the STORED bounds + coarse centroids — a pure
+    // per-doc projection like the PQ families (bounds are NOT
+    // retrained: out-of-range batch values clamp, as in any SQ index)
+    val sq = sqModelFromMeta(meta)
+    val centers = graft.vector.IvfIndex.centersFromDf(
+        catalog.read(db, GraftCollection.ivfSqCentroids(coll)))
+      .map { case (c, i) => (c.toArray, i) }
+    // gate-space batch (the pq arm's rationale) — also true for the
+    // certificate SIDECAR, whose codes this same arm maintains
+    val (keyed, kid) = indexKeyed(gateSpace(
+      batch.where(col(vecCol).isNotNull), quantMetric(meta, "index.ivfsq")))
+    appendSegRows(GraftCollection.ivfSqCodes(coll), seg,
+      graft.vector.IvfSq.encodeAssigned(centers, sq, keyed, kid, vecCol),
+      subPartition = Seq("cell"))
+    // the batch's own per-cell ball radii: an appended row can lie
+    // farther from its centroid than the base rho — without this row
+    // the radius route's cell certificate would silently understate
+    // a cell and drop a true ball member
+    if (catalog.collectionExists(db, GraftCollection.ivfSqStats(coll)))
+      appendSegRows(GraftCollection.ivfSqStats(coll), seg,
+        graft.vector.IvfSq.cellStats(centers, keyed, vecCol))
+  }
+
+  // dedup signatures are per-doc pure functions of the text — the
+  // batch's signatures are a self-contained new segment
+  private[api] def appendMinhashSegment(batch: DataFrame, seg: Int,
+                                        meta: Map[String, String]): Unit = {
+    val sig = graft.dedup.Dedup.minhashSignatures(batch, idCol,
+        meta("index.mh.text_col"), meta("index.mh.shingle").toInt,
+        meta("index.mh.perms").toInt, meta("index.mh.seed").toLong)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      appendSegRows(GraftCollection.mhSig(coll), seg, sig)
+      // keep the joinable band-bucket form in lockstep (one O(batch)
+      // projection; the table may predate the bucket artifact)
+      if (catalog.collectionExists(db, GraftCollection.mhBkt(coll)))
+        appendSegRows(GraftCollection.mhBkt(coll), seg,
+          graft.dedup.Dedup.minhashBandBuckets(sig,
+              meta("index.mh.perms").toInt,
+              meta.getOrElse("index.mh.bands", "8").toInt)
+            .sortWithinPartitions("h"))
+    } finally sig.unpersist()
+  }
+
+  private[api] def appendSimhashSegment(batch: DataFrame, seg: Int,
+                                        meta: Map[String, String]): Unit =
+    appendSegRows(GraftCollection.shSig(coll), seg,
+      graft.dedup.Dedup.simhashSignatures(batch, idCol, meta("index.sh.text_col")))
+
+  private[api] def appendBqSegment(batch: DataFrame, seg: Int,
+                                   meta: Map[String, String]): Unit = {
+    val model = bqModelFromMeta(meta)
+    val (keyed, kid) = indexKeyed(batch.where(col(vecCol).isNotNull))
+    appendSegRows(GraftCollection.bqWords(coll), seg,
+      graft.vector.BqIndex.encode(model, keyed, kid, vecCol))
+  }
+
+  private[api] def appendSparseVectorSegment(batch: DataFrame, seg: Int,
+                                             meta: Map[String, String]): Unit =
+    appendSegRows(GraftCollection.svPostings(coll), seg,
+      graft.sparse.SparseSearch.sparsePostings(batch, idCol,
+          meta("index.sv.field"))
+        .sortWithinPartitions("term"))
 
   /** Incremental HNSW maintenance: the batch becomes its own NEW
     * segment graph(s), built with the stored M/efConstruction/seed and
@@ -491,7 +463,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * graph). [[preparedHnswGraph]] additionally masks seg >= nextseg,
     * covering artifacts written under the old (write-then-meta)
     * ordering. */
-  private def appendHnswSegment(batch: DataFrame, meta: Map[String, String]): Unit = {
+  private[api] def appendHnswSegment(batch: DataFrame, meta: Map[String, String]): Unit = {
     val (keyed, kid) = indexKeyed(batch.where(col(vecCol).isNotNull))
     val shardRows = HnswMaintain.append(hnswStore, keyed, kid, vecCol, meta)
     // recall-floor maintenance (row 123): an appended segment bigger
@@ -537,8 +509,8 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     val entries = docs.select(col(idCol).as("doc_id")).distinct()
       .withColumn("seg", lit(seg))
     if (catalog.collectionExists(db, led))
-      ptime("ledger rewrite")(catalog.overwriteFromSelf(db, led,
-        DocumentOps.upsert(catalog.read(db, led), entries, "doc_id")))
+      catalog.overwriteFromSelf(db, led,
+        DocumentOps.upsert(catalog.read(db, led), entries, "doc_id"))
     else {
       catalog.createCollectionIfNotExists(db, led)
       catalog.write(db, led, entries)
@@ -579,7 +551,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * `add = false` is the DELETION form: the docs' contributions leave
     * the stats and no segment rows are written — the ledger tombstone
     * alone masks their old postings. */
-  private def appendFulltextSegment(docs: DataFrame, seg: Int, textCol: String,
+  private[api] def appendFulltextSegment(docs: DataFrame, seg: Int, textCol: String,
                                     add: Boolean = true): Unit = {
     require(docs.columns.contains(textCol),
       s"upsert on a fulltext-indexed collection must carry '$textCol'")
@@ -638,15 +610,15 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
 
     // order matters: the stats plan reads the OLD collection (decRaw),
     // so it must land before the collection data is overwritten
-    ptime("ft stats rewrite")(catalog.overwriteFromSelf(db, GraftCollection.ftTerms(coll), newTerms))
+    catalog.overwriteFromSelf(db, GraftCollection.ftTerms(coll), newTerms)
     // hash-cluster + in-partition sort (not repartitionByRange: that
     // costs an extra boundary-sampling pass) — each segment file is
     // term-sorted, so rowgroup min/max stats stay tight for In(term)
     // pruning
-    if (add) ptime("ft seg write")(catalog.overwritePartitions(db, GraftCollection.ftPostings(coll),
+    if (add) catalog.overwritePartitions(db, GraftCollection.ftPostings(coll),
       incRaw.repartition(col("term")).sortWithinPartitions("term")
         .withColumn(GraftCollection.SegCol, lit(seg)),
-      GraftCollection.SegCol))
+      GraftCollection.SegCol)
     decRaw.unpersist()
     incRaw.unpersist()
   }
@@ -655,7 +627,8 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * config and seed ride in meta) as a new __seg partition; stale
     * bucket rows of replaced ids are masked by the ledger at query time.
     * O(batch · nBits); the persisted table is never rewritten. */
-  private def appendLshSegment(docs: DataFrame, seg: Int, meta: Map[String, String]): Unit = {
+  private[api] def appendLshSegment(docs: DataFrame, seg: Int,
+                                    meta: Map[String, String]): Unit = {
     val batch = graft.vector.LshIndex.bucketTable(
       docs.where(col(vecCol).isNotNull), idCol, vecCol,
       meta("index.lsh.nbits").toInt, meta("index.lsh.bands").toInt,
@@ -678,7 +651,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * rows are re-assigned against the STORED centroids (a projection —
     * the snapshot rewrite is what the mutation costs anyway), so
     * `search(nprobe)` keeps pruning after updates and deletes too.
-    * Returns whether the IVF layout was kept (the caller's keepIvf). */
+    * Returns whether the IVF layout was kept (the caller's keptCell). */
   private def persistSnapshotKeepingCell(snapshot: DataFrame, ivfLive: Boolean): Boolean = {
     if (!ivfLive || !snapshot.columns.contains(vecCol)) {
       persistSnapshot(snapshot); false
@@ -1251,7 +1224,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
       .withColumnRenamed("vec", GraftCollection.EmbedCol)
     failSafe {
       persistSnapshotKeepingCell(snap.join(emb, Seq(idCol), "left"),
-        liveIndexes(describe).ivfLive)
+        isLive(describe, IndexFamily.Ivf))
     }
     catalog.updateMeta(db, coll, Map("embedding.model" -> "word2vec",
       "embedding.text_field" -> tc, "embedding.dim" -> d.toString))
@@ -1363,7 +1336,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * type switch can never leave one family's probe tables pointing at
     * another family's assignments. */
   private def beginVectorRebuild(what: String): Int = {
-    invalidateVectorIndex()
+    invalidate(IndexFamily.vectorFamilies)
     require(df.where(col(vecCol).isNull).isEmpty,
       s"cannot build $what: collection contains null vectors")
     graft.vector.LshIndex.deriveDimOpt(df, vecCol)
@@ -2628,13 +2601,6 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     graft.dedup.Dedup.simhashPairsFromSignatures(sig, maxHamming)
   }
 
-  /** Compact the mutation history of every live segmented index: fold
-    * the ledger-masked live rows of each artifact into a single fresh
-    * base segment and retire the ledger. O(live artifact rows) — no
-    * re-tokenizing, re-signing, or re-encoding of the corpus (the rows
-    * already hold the derived form), so compaction is strictly cheaper
-    * than a rebuild while restoring single-segment read performance
-    * after a long upsert history. */
   /** Auto-compaction policy: after an indexed mutation, fold segment
     * history once the OLDEST live family has accumulated `threshold`
     * segments since its base. Without a trigger, a long-running ingest
@@ -2651,7 +2617,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
   def segmentDebt: Int = segmentDebt(describe)
 
   private def segmentDebt(meta: Map[String, String]): Int = {
-    val bases = GraftCollection.baseSegKeys.flatMap(meta.get).map(_.toInt)
+    val bases = IndexFamily.all.flatMap(_.baseSegKey).flatMap(meta.get).map(_.toInt)
     if (bases.isEmpty) 0
     else meta.get("mut.seg").map(_.toInt).getOrElse(0) - bases.min
   }
@@ -2666,59 +2632,39 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     if (threshold > 0 && segmentDebt(meta) >= threshold) compactIndexes()
   }
 
+  /** Compact the mutation history of every live segmented index: fold
+    * the ledger-masked live rows of each artifact into a single fresh
+    * base segment and retire the ledger. O(live artifact rows) — no
+    * re-tokenizing, re-signing, or re-encoding of the corpus (the rows
+    * already hold the derived form), so compaction is strictly cheaper
+    * than a rebuild while restoring single-segment read performance
+    * after a long upsert history. Each artifact folds the way its
+    * family declares ([[IndexFamily]]). */
   def compactIndexes(): Unit = {
     val meta = describe
     val seg = mutationSeg
-    def compact(artifact: String, rowId: String, baseKey: String,
-                layout: DataFrame => DataFrame = identity,
-                subPartition: Seq[String] = Nil,
-                surrogate: Boolean = false): Unit =
-      if (meta.contains(baseKey) && catalog.collectionExists(db, artifact)) {
+    for (f <- IndexFamily.all; baseKey <- f.baseSegKey if meta.contains(baseKey);
+         a <- f.artifacts; artifact = a.name(coll)
+         if catalog.collectionExists(db, artifact)) a.compaction match {
+      case Compaction.RowMask(rowId, layout, subPartition, surrogate) =>
         val live = liveSegRows(catalog.read(db, artifact), rowId,
           meta(baseKey).toInt, surrogate)
         catalog.overwriteFromSelf(db, artifact,
           layout(live).withColumn(GraftCollection.SegCol, lit(seg)),
           partitionBy = GraftCollection.SegCol +: subPartition)
         catalog.updateMeta(db, coll, Map(baseKey -> seg.toString))
-      }
-    compact(GraftCollection.ftPostings(coll), "doc_id", "index.ft.base_seg",
-      _.repartition(col("term")).sortWithinPartitions("term"))
-    compact(GraftCollection.lshBuckets(coll), "id", "index.lsh.base_seg")
-    compact(GraftCollection.mhSig(coll), "doc_id", "index.mh.base_seg")
-    compact(GraftCollection.mhBkt(coll), "doc_id", "index.mh.base_seg",
-      _.repartitionByRange(col("h")).sortWithinPartitions("h"))
-    compact(GraftCollection.shSig(coll), "doc_id", "index.sh.base_seg")
-    compact(GraftCollection.pqCodes(coll), "id", "index.pq.base_seg",
-      surrogate = true)
-    compact(GraftCollection.bqWords(coll), "id", "index.bq.base_seg",
-      surrogate = true)
-    compact(GraftCollection.svPostings(coll), "doc_id", "index.sv.base_seg",
-      _.repartition(col("term")).sortWithinPartitions("term"))
-    compact(GraftCollection.ivfPqCodes(coll), "id", "index.ivfpq.base_seg",
-      _.repartition(col("cell")), Seq("cell"), surrogate = true)
-    compact(GraftCollection.ivfSqCodes(coll), "id", "index.ivfsq.base_seg",
-      _.repartition(col("cell")), Seq("cell"), surrogate = true)
-    // ball-radius stats fold by max(rho) per cell — NOT liveSegRows
-    // masking (stats are per-cell aggregates, not per-doc rows): the
-    // max over all generations stays an upper bound because deletes
-    // only shrink cells (conservative-correct, never recall-lossy)
-    def foldStats(artifact: String, baseKey: String): Unit =
-      if (meta.contains(baseKey) && catalog.collectionExists(db, artifact))
+      case Compaction.MaxRho =>
         catalog.overwriteFromSelf(db, artifact,
           catalog.read(db, artifact)
             .groupBy("cell").agg(max("rho").as("rho"))
             .withColumn(GraftCollection.SegCol, lit(seg)),
           partitionBy = Seq(GraftCollection.SegCol))
-    foldStats(GraftCollection.ivfSqStats(coll), "index.ivfsq.base_seg")
-    foldStats(GraftCollection.ivfPqStats(coll), "index.ivfpq.base_seg")
-    // HNSW has no row-level fold — a graph's value IS its edge
-    // structure — so this family compacts with a TIERED MERGE POLICY
-    // (the Lucene answer): fold only the SMALL segments into fresh
-    // merged segment graph(s) at O(merged·log merged), leaving the
-    // big base-tier graphs untouched until their own tier fills.
-    if (meta.contains("index.hnsw.base_seg") &&
-        catalog.collectionExists(db, GraftCollection.hnswGraph(coll)))
-      compactHnsw(meta, seg)
+      // tiered merge: fold only the SMALL segments into fresh merged
+      // segment graph(s) at O(merged·log merged), leaving the big
+      // base-tier graphs untouched until their own tier fills
+      case Compaction.HnswTiered => compactHnsw(meta, seg)
+      case Compaction.Keep =>
+    }
     // every family now serves from its single fresh segment — the
     // ledger has nothing left to mask
     if (catalog.collectionExists(db, GraftCollection.mutLedger(coll)))
@@ -2858,7 +2804,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * the row-118 byte-equality, so coexistence needs no recall
     * argument). `metric` defaults to the primary HNSW graph's stored
     * metric so the routed radius gates in the metric the collection
-    * actually serves. Upserts maintain BOTH artifacts (the ivfSqLive
+    * actually serves. Upserts maintain BOTH artifacts (the IVF_SQ8
     * append arm fires exactly as for a primary SQ8 index); deletes
     * need nothing (cells only shrink). Rebuilding the graph
     * invalidates the sidecar like any sibling — rebuild the sidecar
@@ -2877,7 +2823,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
         "cannot build IVF_SQ8 sidecar on an empty collection"))
     buildIvfSqArtifacts(nlist, m, dim)
     // the staleness witness (r13 verdict #4): this key deliberately
-    // lives OUTSIDE every invalidation list, so when a later vector
+    // lives OUTSIDE every family's meta prefix, so when a later vector
     // rebuild drops the sidecar's artifacts it SURVIVES — the one
     // piece of evidence that a sidecar was wanted here, which is what
     // lets sidecarStale report the silent FLAT fallback instead of
@@ -2897,7 +2843,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
   def sidecarStale: Boolean = {
     val meta = describe
     meta.get("index.sidecar.wanted").contains("true") &&
-      !liveIndexes(meta).ivfSqLive
+      !isLive(meta, IndexFamily.IvfSq)
   }
 
   /** One-line operator recommendation when [[sidecarStale]]. */
@@ -2918,10 +2864,9 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * graph) the artifact set serves top-k too and is left alone;
     * only the witness clears. */
   def dropCertificateSidecar(): Unit = {
-    val live = liveIndexes(describe)
-    if (live.ivfSqLive && live.hnswLive)
-      invalidateVectorIndex(keepIvf = true, keepLsh = true, keepPq = true,
-        keepIvfPq = true, keepIvfSq = false, keepHnsw = true, keepBq = true)
+    val meta = describe
+    if (isLive(meta, IndexFamily.IvfSq) && isLive(meta, IndexFamily.Hnsw))
+      invalidate(Seq(IndexFamily.IvfSq))
     catalog.updateMeta(db, coll, Map("index.sidecar.wanted" -> "false"))
   }
 
@@ -3616,7 +3561,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * invalidated with it — meta and centroids must not survive. */
   private def rewriteIndexedLayout(): Unit = {
     persistSnapshot(df)
-    invalidateVectorIndex()
+    invalidate(IndexFamily.vectorFamilies)
   }
 
   /** rebuild_index for the fulltext surface: materialize the BM25
@@ -3653,96 +3598,21 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
         baseSeg = describe.get("index.ft.base_seg").map(_.toInt).getOrElse(0)))
     } else None
 
-  /** Drop a family's artifact collections + meta keys. */
-  private def invalidateFamily(colls: Seq[String], keys: Seq[String]): Unit = {
-    colls.foreach(c => if (catalog.collectionExists(db, c)) catalog.dropCollection(db, c))
-    val meta = describe
-    val stale = keys.filter(meta.contains)
+  /** Drop `families`' artifact collections and every meta key under
+    * their `index.<tag>.` prefixes — an index is gone whenever its
+    * layout or corpus is rewritten, unless the caller maintained it
+    * incrementally; meta must not keep advertising it. Keys outside
+    * every family prefix (`index.sidecar.wanted`, the scalar
+    * `index.partitioned` / `index.sorted` layout) survive. */
+  private def invalidate(families: Seq[IndexFamily]): Unit = {
+    families.flatMap(_.artifactNames(coll)).foreach(c =>
+      if (catalog.collectionExists(db, c)) catalog.dropCollection(db, c))
+    val stale = describe.keys.filter(k => families.exists(f => k.startsWith(f.prefix)))
     if (stale.nonEmpty)
       catalog.updateMeta(db, coll, stale.map(_ -> (null: String)).toMap)
-  }
-
-  /** Invalidate derived indexes after a mutation. Upsert, update, and
-    * delete pass keep flags for every family they maintained
-    * incrementally (segments + ledger, or the re-assigned IVF layout);
-    * a family is dropped only when it could NOT be maintained —
-    * truncate invalidates everything. Serving a stale index silently
-    * would be worse than the rebuild cost, so any unmaintained family
-    * loses its meta too. */
-  private def invalidateDerived(keepFt: Boolean = false, keepIvf: Boolean = false,
-                                keepLsh: Boolean = false, keepMh: Boolean = false,
-                                keepSh: Boolean = false, keepPq: Boolean = false,
-                                keepIvfPq: Boolean = false,
-                                keepIvfSq: Boolean = false,
-                                keepHnsw: Boolean = false,
-                                keepBq: Boolean = false,
-                                keepSv: Boolean = false): Unit = {
-    if (!keepFt)
-      invalidateFamily(Seq(GraftCollection.ftPostings(coll), GraftCollection.ftTerms(coll)),
-        Seq("index.ft.text_col", "index.ft.base_seg"))
-    if (!keepMh)
-      invalidateFamily(Seq(GraftCollection.mhSig(coll), GraftCollection.mhBkt(coll)),
-        Seq("index.mh.text_col", "index.mh.shingle", "index.mh.perms",
-          "index.mh.seed", "index.mh.bands", "index.mh.base_seg"))
-    if (!keepSh)
-      invalidateFamily(Seq(GraftCollection.shSig(coll)),
-        Seq("index.sh.text_col", "index.sh.base_seg"))
-    if (!keepSv)
-      invalidateFamily(Seq(GraftCollection.svPostings(coll)),
-        Seq("index.sv.field", "index.sv.base_seg"))
-    invalidateVectorIndex(keepIvf, keepLsh, keepPq, keepIvfPq, keepIvfSq, keepHnsw,
-      keepBq)
-  }
-
-  /** Drop the persisted vector-index models (IVF centroids, PQ
-    * codes+codebooks, LSH buckets) and their meta — an index is gone
-    * whenever its layout or corpus is rewritten, unless the caller
-    * maintained it incrementally; meta must not keep advertising it. */
-  private def invalidateVectorIndex(keepIvf: Boolean = false,
-                                    keepLsh: Boolean = false,
-                                    keepPq: Boolean = false,
-                                    keepIvfPq: Boolean = false,
-                                    keepIvfSq: Boolean = false,
-                                    keepHnsw: Boolean = false,
-                                    keepBq: Boolean = false): Unit = {
-    if (!keepHnsw) {
-      invalidateFamily(Seq(GraftCollection.hnswGraph(coll)),
-        Seq("index.hnsw.m", "index.hnsw.efc", "index.hnsw.segments",
-          "index.hnsw.metric", "index.hnsw.dim", "index.hnsw.seed",
-          "index.hnsw.nextseg", "index.hnsw.base_seg", "index.hnsw.gen",
-          // crash markers die with the graph they describe — a stale
-          // merge_pending surviving into a REBUILT graph would make the
-          // next compaction's recovery drop live segments of the new
-          // graph (their ids collide with the old mini-segment range)
-          "index.hnsw.pending", "index.hnsw.merge_pending"))
+    // the one process-wide serving cache an artifact has
+    if (families.contains(IndexFamily.Hnsw))
       GraftCollection.evictHnswServing(catalog.rootPath, db, coll)
-    }
-    if (!keepIvf)
-      invalidateFamily(Seq(GraftCollection.ivfCentroids(coll)),
-        Seq("index.ivf.nlist", "index.ivf.metric"))
-    if (!keepLsh)
-      invalidateFamily(Seq(GraftCollection.lshBuckets(coll)),
-        Seq("index.lsh.nbits", "index.lsh.bands", "index.lsh.dim",
-          "index.lsh.seed", "index.lsh.base_seg"))
-    if (!keepPq)
-      invalidateFamily(
-        Seq(GraftCollection.pqCodes(coll), GraftCollection.pqCodebooks(coll)),
-        Seq("index.pq.m", "index.pq.k", "index.pq.dim", "index.pq.base_seg"))
-    if (!keepIvfPq)
-      invalidateFamily(
-        Seq(GraftCollection.ivfPqCodes(coll), GraftCollection.ivfPqCentroids(coll),
-          GraftCollection.ivfPqCodebooks(coll), GraftCollection.ivfPqStats(coll)),
-        Seq("index.ivfpq.nlist", "index.ivfpq.m", "index.ivfpq.k",
-          "index.ivfpq.dim", "index.ivfpq.base_seg"))
-    if (!keepIvfSq)
-      invalidateFamily(
-        Seq(GraftCollection.ivfSqCodes(coll), GraftCollection.ivfSqCentroids(coll),
-          GraftCollection.ivfSqBounds(coll), GraftCollection.ivfSqStats(coll)),
-        Seq("index.ivfsq.nlist", "index.ivfsq.dim", "index.ivfsq.base_seg"))
-    if (!keepBq)
-      invalidateFamily(
-        Seq(GraftCollection.bqWords(coll), GraftCollection.bqThresholds(coll)),
-        Seq("index.bq.dim", "index.bq.metric", "index.bq.base_seg"))
   }
 
   /** fulltext_search: BM25-ranked docs containing the query terms; uses
@@ -3839,12 +3709,12 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
                           filter: String = "",
                           nprobe: Option[Int] = None): DataFrame = {
     val meta = describe
-    val live = liveIndexes(meta)
+    val hnswLive = isLive(meta, IndexFamily.Hnsw)
     require(ef.isEmpty || nprobe.isEmpty,
       "ef tunes HNSW and nprobe tunes IVF — pass the param of the live index")
-    require(ef.isEmpty || live.hnswLive,
+    require(ef.isEmpty || hnswLive,
       "hybrid ef search param requires a live HNSW index")
-    require(nprobe.isEmpty || live.ivfLive,
+    require(nprobe.isEmpty || isLive(meta, IndexFamily.Ivf),
       "hybrid nprobe search param requires a live IVF index")
     // the reference serves hybrid from the collection's CONFIGURED
     // index with that index's search params AND metric — each arm
@@ -3858,7 +3728,7 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
       search(queries, qIdCol, qVecCol,
         meta.getOrElse("index.ivf.metric", "l2"), fetch,
         filter = filter, nprobe = nprobe)
-    else if (live.hnswLive) {
+    else if (hnswLive) {
       // a FILTERED arm with NO explicit ef routes through the adaptive
       // path (cost-routed FLAT under selective filters, beam
       // escalation otherwise) — the fixed default beam's post-filter
@@ -4039,9 +3909,10 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * layout the snapshot rewrite replaces. */
   private def deleteKeeping(survivors: DataFrame, doomedRows: DataFrame): Unit = {
     val meta = describe
-    val live = liveIndexes(meta)
+    val live = liveFamilies(meta)
+    val ivfLive = live.contains(IndexFamily.Ivf)
     val keptCell =
-      if (live.anySeg) {
+      if (live.exists(_.segmented)) {
         val doomed = doomedRows
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
@@ -4052,23 +3923,18 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
           failSafe {
             if (anyDoomed) {
               val seg = mutationSeg + 1
-              if (live.ftLive)
-                appendFulltextSegment(doomed, seg, meta("index.ft.text_col"), add = false)
+              live.foreach(_.retract.foreach(_(this, doomed, seg, meta)))
               advanceLedger(doomed, seg)
             }
-            persistSnapshotKeepingCell(survivors, live.ivfLive)
+            persistSnapshotKeepingCell(survivors, ivfLive)
           }
         } finally doomed.unpersist()
-      } else failSafe { persistSnapshotKeepingCell(survivors, live.ivfLive) }
+      } else failSafe { persistSnapshotKeepingCell(survivors, ivfLive) }
     // HNSW keeps serving across deletes at ZERO maintenance cost: the
     // search's exact rerank joins candidates against the CURRENT data
     // snapshot, so doomed ids drop out; stale graph nodes are waypoints
     // only, folded away by the next compaction
-    invalidateDerived(keepFt = live.ftLive, keepIvf = keptCell, keepLsh = live.lshLive,
-      keepMh = live.mhLive, keepSh = live.shLive, keepPq = live.pqLive,
-      keepIvfPq = live.ivfPqLive, keepIvfSq = live.ivfSqLive,
-      keepHnsw = live.hnswLive, keepBq = live.bqLive, keepSv = live.svLive)
-    if (live.anySeg) maybeAutoCompact()
+    finishMutation(live, keptCell)
   }
 
   /** The update projection maps stored columns only — a `set` key that
@@ -4112,9 +3978,10 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
     * layout). */
   private def updateKeeping(updatedSnapshot: DataFrame, matchPred: Column): Unit = {
     val meta = describe
-    val live = liveIndexes(meta)
+    val live = liveFamilies(meta)
+    val ivfLive = live.contains(IndexFamily.Ivf)
     val keptCell =
-      if (live.anySeg) {
+      if (live.exists(_.segmented)) {
         // the WHOLE post-image snapshot is persisted and both the index
         // batch and the data write read the SAME cached evaluation — a
         // nondeterministic set-expression must not index one value and
@@ -4135,21 +4002,20 @@ final class GraftCollection(spark: SparkSession, catalog: Catalog,
             val anyMatched = !batch.isEmpty
             failSafe {
               if (anyMatched) appendLiveSegments(batch, meta, live)
-              persistSnapshotKeepingCell(snap, live.ivfLive)
+              persistSnapshotKeepingCell(snap, ivfLive)
             }
           } finally batch.unpersist()
         } finally snap.unpersist()
-      } else failSafe { persistSnapshotKeepingCell(updatedSnapshot, live.ivfLive) }
-    invalidateDerived(keepFt = live.ftLive, keepIvf = keptCell, keepLsh = live.lshLive,
-      keepMh = live.mhLive, keepSh = live.shLive, keepPq = live.pqLive,
-      keepIvfPq = live.ivfPqLive, keepIvfSq = live.ivfSqLive,
-      keepHnsw = live.hnswLive, keepBq = live.bqLive, keepSv = live.svLive)
-    if (live.anySeg) maybeAutoCompact()
+      } else failSafe { persistSnapshotKeepingCell(updatedSnapshot, ivfLive) }
+    finishMutation(live, keptCell)
   }
 
+  /** truncate_collection: drop all rows and every derived index; the
+    * collection and its non-index metadata stay. */
   def truncate(): Unit = {
+    require(catalog.collectionExists(db, coll), s"collection $db.$coll does not exist")
     catalog.truncateCollection(db, coll)
-    invalidateDerived()
+    invalidate(IndexFamily.all)
   }
 }
 
@@ -4259,13 +4125,13 @@ object GraftCollection {
   private[api] def bqThresholds(coll: String): String = coll + "__bq_thresholds"
   private[api] def svPostings(coll: String): String = coll + "__sv_postings"
 
-  /** Meta keys recording each segment-maintained family's base segment
-    * — the compaction policy measures debt against the OLDEST one. */
-  private[api] val baseSegKeys: Seq[String] = Seq(
-    "index.ft.base_seg", "index.lsh.base_seg", "index.mh.base_seg",
-    "index.sh.base_seg", "index.pq.base_seg", "index.ivfpq.base_seg",
-    "index.ivfsq.base_seg", "index.hnsw.base_seg", "index.bq.base_seg",
-    "index.sv.base_seg")
+  /** Every sibling collection `coll` can own: index-family artifacts,
+    * the mutation ledger and the trained-model artifacts. Named, not
+    * prefix-scanned: `coll__x` is a valid user collection name. */
+  private[api] def companions(coll: String): Seq[String] =
+    IndexFamily.all.flatMap(_.artifactNames(coll)) ++
+      Seq(mutLedger(coll), w2vVocab(coll), qcWeights(coll), lmBigrams(coll),
+        dsirRatios(coll))
 
   /** Default auto-compaction threshold (segments past the oldest base
     * before [[GraftCollection.compactIndexes]] fires): high enough that
